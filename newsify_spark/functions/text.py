@@ -170,18 +170,31 @@ def pii_counts(text: Column | str) -> list[tuple[str, Column]]:
 # ------------------------------------------------------------- repetition
 def top_ngram_fraction(text: Column | str, n: int = 2) -> Column:
     """Gopher-style repetition signal: occurrence fraction of the most
-    frequent word n-gram. One higher-order expression — the inner
-    filter-count is O(|distinct|·|shingles|) per row, bounded by document
-    length, with no shuffle and no UDF."""
-    bg = word_shingles(text, n)
-    top = F.array_max(
-        F.transform(
-            F.array_distinct(bg),
-            lambda s: F.size(F.filter(bg, lambda x: x == s)),
+    frequent word n-gram. One expression, no shuffle, no UDF: the n-gram
+    array is let-bound (built once per row, not once per lambda
+    element), sorted, and its longest run of equal neighbours is the
+    top count, found in one ``aggregate`` pass over a (prev, run, best)
+    state — O(s log s) in the s shingles of the row."""
+    from newsify_spark.functions.scalars import let
+
+    def step(acc: Column, x: Column) -> Column:
+        run = F.when(acc["prev"] == x, acc["run"] + 1).otherwise(F.lit(1))
+        return F.struct(
+            x.alias("prev"), run.alias("run"), F.greatest(acc["best"], run).alias("best")
         )
+
+    start = F.struct(
+        F.lit(None).cast("string").alias("prev"),
+        F.lit(0).alias("run"),
+        F.lit(0).alias("best"),
     )
-    return F.when(F.size(bg) > 0, top.cast("double") / F.size(bg)).otherwise(
-        F.lit(0.0)
+    return let(
+        word_shingles(text, n),
+        lambda bg: F.when(
+            F.size(bg) > 0,
+            F.aggregate(F.array_sort(bg), start, step, lambda acc: acc["best"]).cast("double")
+            / F.size(bg),
+        ).otherwise(F.lit(0.0)),
     )
 
 

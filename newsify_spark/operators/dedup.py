@@ -146,11 +146,17 @@ def minhash_dedup(
     num_hashes: int = 16,
     band_size: int = 4,
     shingle_n: int = 3,
+    sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Full near-dup pipeline -> survivor rows (lowest id per duplicate
     group wins; groups are edges' connected pairs collapsed greedily to
-    min-id, one pass — adequate for near-dup graphs which are cliquey)."""
-    sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n)
+    min-id, one pass — adequate for near-dup graphs which are cliquey).
+
+    ``sigs`` takes the docs' :func:`minhash_signatures` (same
+    ``num_hashes``/``shingle_n``) when the caller already holds them, so
+    a pipeline that also needs the signatures computes them once."""
+    if sigs is None:
+        sigs = minhash_signatures(docs, id_col, text_col, num_hashes, shingle_n)
     cands = lsh_candidate_pairs(sigs, id_col, num_hashes, band_size)
     dups = jaccard_pairs(docs, cands, id_col, text_col, shingle_n).filter(
         F.col("jaccard") >= threshold
@@ -517,6 +523,7 @@ def incremental_dedup(
     band_size: int = 4,
     est_threshold: float = 0.5,
     max_bucket: int = 1000,
+    new_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Ingestion-time dedup of a NEW batch against an already-ingested
     corpus represented ONLY by its stored MinHash signatures — the
@@ -536,11 +543,16 @@ def incremental_dedup(
     Every join is signature-sized and key-partitioned; ``max_bucket``
     drops degenerate boilerplate buckets on the store side before the
     join (same skew guard as lsh_candidate_pairs).
+
+    ``new_sigs`` takes precomputed :func:`minhash_signatures` of the
+    batch; they may cover a superset of ``new_docs`` (e.g. the batch
+    before within-batch dedup), since only ``new_docs`` rows are kept.
     """
-    new_sigs = minhash_signatures(
-        new_docs, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, shingle_n=shingle_n,
-    )
+    if new_sigs is None:
+        new_sigs = minhash_signatures(
+            new_docs, id_col=id_col, text_col=text_col,
+            num_hashes=num_hashes, shingle_n=shingle_n,
+        )
     nb = _sig_bands(new_sigs, id_col, num_hashes, band_size).withColumnRenamed(
         id_col, "new_id"
     )

@@ -1,4 +1,5 @@
-"""SparkSession factory.
+"""SparkSession factory, and ``materialized``: the scope for lineage-cut
+intermediates that releases their blocks on every path.
 
 Defaults are tuned for the local[32] test harness but chosen so the same
 code is correct on a 1000-executor cluster:
@@ -17,8 +18,10 @@ code is correct on a 1000-executor cluster:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -55,3 +58,38 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def materialized(spark: SparkSession) -> Iterator[Callable[[DataFrame], DataFrame]]:
+    """Scope for lineage-cut intermediates: ``with materialized(spark) as
+    cut:`` yields ``cut(df)``, which evaluates ``df`` once into executor
+    blocks (``localCheckpoint(eager=True)``) and returns a DataFrame that
+    reads them back with no lineage behind it. On exit, on every path,
+    the scope releases exactly the blocks its own ``cut`` calls created,
+    including those of a cut whose job failed part-way (that RDD is
+    already pinned and has no other handle). The created RDDs are the
+    ones that appear in the context's persistent-RDD map during a cut,
+    so no other thread may persist on the same context meanwhile.
+
+    A cut DataFrame is unreadable once the scope exits: whatever must
+    outlive it is written first and read back from storage. A lost
+    executor loses its blocks and fails the next read of the cut, so a
+    scope suits work that is safe to rerun as a whole."""
+    pinned = spark.sparkContext._jsc.getPersistentRDDs
+    created: set[int] = set()
+
+    def cut(df: DataFrame) -> DataFrame:
+        before = set(pinned().keySet().toArray())
+        try:
+            return df.localCheckpoint(eager=True)
+        finally:
+            created.update(set(pinned().keySet().toArray()) - before)
+
+    try:
+        yield cut
+    finally:
+        rdds = pinned()
+        for rid in created:
+            if rdds.containsKey(rid):
+                rdds.get(rid).unpersist(False)

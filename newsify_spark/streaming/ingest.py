@@ -17,13 +17,19 @@ Per micro-batch:
    parquet partitions (one per batch, same idempotent overwrite
    contract) and loaded+bit_or-merged per trigger — m/64-bounded rows,
    never a rescan of the corpus key set;
-1. within-batch dedup (``minhash_dedup`` — two dups arriving together
+1. one MinHash signature pass over the prefiltered batch, shared by
+   every later step;
+2. within-batch dedup (``minhash_dedup`` — two dups arriving together
    would both pass the store check);
-2. cross-set LSH band join of the batch signatures vs the store,
+3. cross-set LSH band join of the batch signatures vs the store,
    signature-only Jaccard estimate, drop hits
    (``incremental_dedup``);
-3. append survivors to ``out_path/batch=<id>/`` and their signatures to
+4. append survivors to ``out_path/batch=<id>/`` (or the bronze
+   transaction log) and their signatures, filtered from step 1, to
    ``store_path/batch=<id>/``.
+
+The prefiltered batch, its signatures and the survivors of steps 2 and
+3 are lineage cuts (``session.materialized``), released before return.
 
 Idempotent restarts: foreachBatch can re-deliver a batch after a
 failure, so BOTH writes go to a batch-id subdirectory with
@@ -48,6 +54,7 @@ from newsify_spark.operators.dedup import (
     minhash_dedup,
     minhash_signatures,
 )
+from newsify_spark.session import materialized
 
 # reserved bloom-store partition id for the one-time migration build
 # (real trigger batch ids are >= 0, so -1 never collides)
@@ -98,7 +105,11 @@ def ingest_batch(
     txn_bronze: bool = False,
 ) -> DataFrame:
     """Process ONE micro-batch (the foreachBatch body, exposed for batch
-    use and tests). Returns the surviving rows it appended.
+    use and tests). Returns the batch's rows as written: a lazy scan of
+    data already on storage, never of the released intermediates — the
+    ``out_path/batch=<id>`` partition, or with ``txn_bronze`` the bronze
+    rows committed under this batch id (for a replay that commits
+    nothing, the rows its first delivery committed), without ``_batch``.
 
     ``txn_bronze=True`` lands survivors on a copy-on-write transaction
     log at ``out_path`` via :func:`operators.txnlog.idempotent_append`
@@ -157,68 +168,80 @@ def ingest_batch(
         # and is excluded from exclude_batch filters only when asked.
         words = bloom_build_words(pre_store.select("text_hash"), "text_hash", m_store)
         save_bloom_partition(words, bloom_store_path, MIGRATION_BATCH_ID)
-    hashed = None
-    if words is not None:
-        # the batch source feeds the prefilter's definitely-new/maybe
-        # split AND the MinHash stages below — persist it once so the
-        # un-cached source isn't evaluated three times (ADVICE r5)
-        hashed = batch.withColumn("text_hash", F.md5(F.col(text_col))).persist()
-        # small store: collect the m/64-bounded words into a plan-literal
-        # bitmap (zero-shuffle codegen probe); big store: the words table
-        # stays distributed and the relational probe joins it as data.
-        # Verification side either way: only bloom-POSITIVE rows reach the
-        # anti-join, probing the store's single hash column.
-        if m_store // 64 <= LITERAL_MAX_WORDS:
-            bitmap = _words_to_bitmap(words.collect(), m_store)
-            batch = bloom_prefilter_dedup(
-                hashed, pre_store.select("text_hash"), "text_hash", bitmap=bitmap
-            ).drop("text_hash")
-        else:
-            batch = bloom_prefilter_dedup(
-                hashed,
-                pre_store.select("text_hash"),
-                "text_hash",
-                words=words.select("word", "bits"),
-                m_bits=m_store,
-            ).drop("text_hash")
-        # the prefiltered batch feeds EVERY downstream MinHash branch
-        # (16 band scans x 2 join sides) — persist it so the probe's
-        # join/groupBy chain runs once, not once per branch
-        batch = batch.persist()
-    # 1. within-batch near-dup (min-id survivor). Persisted: the store
-    #    check below re-reads it from FIVE branches (signature pass, two
-    #    band-join sides via the bucket sizing, the estimate join, the
-    #    final anti join) — unpersisted, each branch re-ran the whole
-    #    shingle/LSH/Jaccard DAG (r13, guide §5; ~5x the per-batch jobs).
-    local = minhash_dedup(
-        batch,
-        id_col=id_col,
-        text_col=text_col,
-        threshold=jaccard_threshold,
-        num_hashes=num_hashes,
-        band_size=band_size,
-        shingle_n=shingle_n,
-    ).persist()
-    # 2. vs-store (signature-only estimate; excludes this batch's own
-    #    partition so a replay is deterministic)
-    store = pre_store.drop("text_hash") if "text_hash" in pre_store.columns else pre_store
-    survivors = incremental_dedup(
-        local,
-        store,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        shingle_n=shingle_n,
-        band_size=band_size,
-        est_threshold=est_threshold,
-    )
-    # one pass feeds both writes
-    survivors = survivors.persist()
-    try:
+    # The four batch-sized intermediates are lineage cuts: each later
+    # action would otherwise analyse (and re-run) the whole accumulated
+    # shingle/LSH plan again. A lost executor loses the cut blocks and
+    # fails the batch; the batch-id idempotent writes below make that
+    # batch safe to replay. The scope opens before the first cut, so
+    # every path out of it, exceptions included, releases them.
+    with materialized(spark) as cut:
+        docs = batch
+        if words is not None:
+            hashed = batch.withColumn("text_hash", F.md5(F.col(text_col)))
+            # small store: collect the m/64-bounded words into a plan-literal
+            # bitmap (zero-shuffle codegen probe); big store: the words table
+            # stays distributed and the relational probe joins it as data.
+            # Verification side either way: only bloom-POSITIVE rows reach the
+            # anti-join, probing the store's single hash column.
+            if m_store // 64 <= LITERAL_MAX_WORDS:
+                bitmap = _words_to_bitmap(words.collect(), m_store)
+                docs = bloom_prefilter_dedup(
+                    hashed, pre_store.select("text_hash"), "text_hash", bitmap=bitmap
+                )
+            else:
+                docs = bloom_prefilter_dedup(
+                    hashed,
+                    pre_store.select("text_hash"),
+                    "text_hash",
+                    words=words.select("word", "bits"),
+                    m_bits=m_store,
+                )
+            docs = docs.drop("text_hash")
+        docs = cut(docs)
+        # one signature pass feeds the within-batch LSH, the store check
+        # and the store write
+        sigs = cut(
+            minhash_signatures(
+                docs,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                shingle_n=shingle_n,
+            )
+        )
+        # 1. within-batch near-dup (min-id survivor)
+        local = cut(
+            minhash_dedup(
+                docs,
+                id_col=id_col,
+                text_col=text_col,
+                threshold=jaccard_threshold,
+                num_hashes=num_hashes,
+                band_size=band_size,
+                shingle_n=shingle_n,
+                sigs=sigs,
+            )
+        )
+        # 2. vs-store (signature-only estimate; excludes this batch's own
+        #    partition so a replay is deterministic)
+        store = pre_store.drop("text_hash") if "text_hash" in pre_store.columns else pre_store
+        survivors = cut(
+            incremental_dedup(
+                local,
+                store,
+                id_col=id_col,
+                text_col=text_col,
+                num_hashes=num_hashes,
+                shingle_n=shingle_n,
+                band_size=band_size,
+                est_threshold=est_threshold,
+                new_sigs=sigs,
+            )
+        )
         if txn_bronze:
-            from newsify_spark.operators.txnlog import idempotent_append
+            from newsify_spark.operators import txnlog
 
-            idempotent_append(
+            txnlog.idempotent_append(
                 spark,
                 out_path,
                 survivors.withColumn("_batch", F.lit(int(batch_id))),
@@ -229,16 +252,8 @@ def ingest_batch(
             survivors.write.mode("overwrite").parquet(
                 f"{out_path}/batch={batch_id}"
             )
-        sigs = minhash_signatures(
-            survivors,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            shingle_n=shingle_n,
-        )
-        # text_hash rides along for the next batch's bloom fast path
-        # (broadcast-join back — sigs and the hash side are both
-        # batch-sized)
+        # text_hash rides along for the next batch's bloom fast path; the
+        # inner join keeps the survivors' signatures only
         hashes = survivors.select(
             F.col(id_col), F.md5(F.col(text_col)).alias("text_hash")
         )
@@ -252,28 +267,14 @@ def ingest_batch(
             bloom_store_path,
             batch_id,
         )
-        if not txn_bronze:
-            # hand the caller the WRITTEN rows (identical by
-            # construction: the overwrite above is the only writer of
-            # this partition) — post-return actions cost a file scan
-            # instead of re-running the whole shingle/LSH DAG after the
-            # unpersists below (r13, guide §5). Explicit schema: an
-            # empty batch writes a _SUCCESS-only dir.
-            result = spark.read.schema(survivors.schema).parquet(
-                f"{out_path}/batch={batch_id}"
-            )
-        else:
-            # bronze path: callers re-reading the result after return
-            # re-run the (batch-sized) plan; the txnlog itself holds the
-            # written rows
-            result = survivors
-    finally:
-        local.unpersist()
-        survivors.unpersist()
-        if hashed is not None:
-            batch.unpersist()
-            hashed.unpersist()
-    return result
+        schema = survivors.schema
+    # the cut blocks are gone: hand back a scan of what was written
+    if txn_bronze:
+        return txnlog.read_table(
+            spark, out_path, where=[("_batch", "=", int(batch_id))]
+        ).drop("_batch")
+    # explicit schema: an empty batch writes a _SUCCESS-only dir
+    return spark.read.schema(schema).parquet(f"{out_path}/batch={batch_id}")
 
 
 def expire_store_batches(

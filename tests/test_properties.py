@@ -5,13 +5,14 @@ deterministic frames, laws that must hold for ANY input:
 - asof_join == brute-force latest-prior reference
 - upsert/bulk_update/delete merge laws
 - MinHash Jaccard estimate within statistical error of exact Jaccard
+- top_ngram_fraction == collections.Counter reference
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -120,6 +121,30 @@ def test_minhash_estimates_jaccard(spark, data):
     sigs = minhash_signatures_pandas(docs).toPandas().set_index("doc_id")
     agree = sum(sigs.loc[0, f"h{i}"] == sigs.loc[1, f"h{i}"] for i in range(16)) / 16
     assert abs(agree - exact_j) <= 0.35
+
+
+@given(docs=st.lists(st.lists(st.sampled_from(["a", "b", "A", "cc"]), max_size=10), min_size=1, max_size=20))
+@example(docs=[[], ["a"], ["a"] * 7, ["a", "b", "a", "b"], ["a", "b", "b", "a"]])
+@settings(**SETTINGS)
+def test_top_ngram_fraction_matches_counter(spark, docs):
+    """top_ngram_fraction(text, 2) == highest bigram count / bigram
+    count, bit for bit. The empty token list is the empty string; a
+    text shorter than one bigram is a single gram (word_shingles); the
+    explicit example adds a single repeated token and tied maxima."""
+    from collections import Counter
+
+    from newsify_spark.functions.text import top_ngram_fraction
+
+    texts = [" ".join(toks) for toks in docs]
+
+    def ref(text: str) -> float:
+        toks = text.lower().split(" ")
+        grams = [" ".join(toks[i : i + 2]) for i in range(len(toks) - 1)] or [" ".join(toks)]
+        return max(Counter(grams).values()) / len(grams)
+
+    df = spark.createDataFrame(list(enumerate(texts)), "i int, text string")
+    got = df.select("i", top_ngram_fraction("text", 2).alias("f")).collect()
+    assert sorted((r.i, r.f) for r in got) == [(i, ref(t)) for i, t in enumerate(texts)]
 
 
 @given(

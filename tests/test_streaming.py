@@ -6,6 +6,7 @@ Structured Streaming smoke over a parquet-fed source.
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_DIR
@@ -501,6 +502,14 @@ def test_streaming_ingest_dedup_cross_and_within_batch(spark, tmp_path):
     assert sorted(r.doc_id for r in sigs.collect()) == [1, 3, 11]
     corpus = spark.read.parquet(out)
     assert sorted(r.doc_id for r in corpus.collect()) == [1, 3, 11]
+    # the store rows come from the signature pass shared across the
+    # dedup stages: they must equal a fresh pass over the admitted docs
+    from newsify_spark.operators.dedup import minhash_signatures
+
+    hcols = [f"h{i}" for i in range(16)]
+    stored = sorted(map(tuple, sigs.select("doc_id", *hcols).collect()))
+    fresh = minhash_signatures(corpus.select("doc_id", "text"))
+    assert stored == sorted(map(tuple, fresh.select("doc_id", *hcols).collect()))
 
 
 def test_streaming_ingest_replay_is_idempotent(spark, tmp_path):
@@ -552,9 +561,14 @@ def test_streaming_ingest_txn_bronze_replay_exactly_once(spark, tmp_path):
     b1 = mk([(2, "a completely different second document about engines and parquet")])
 
     ingest_batch(b0, 0, store, out, txn_bronze=True)
-    ingest_batch(b1, 1, store, out, txn_bronze=True)
+    first = ingest_batch(b1, 1, store, out, txn_bronze=True)
     # restart: foreachBatch replays the LAST batch with the same id
-    ingest_batch(b1, 1, store, out, txn_bronze=True)
+    replay = ingest_batch(b1, 1, store, out, txn_bronze=True)
+    # both return a scan of the rows committed under batch 1 (the
+    # intermediates behind the first call are released by now)
+    assert [(r.doc_id, r.text) for r in first.collect()] == [(2, b1.first().text)]
+    assert replay.collect() == first.collect()
+    assert first.columns == ["doc_id", "text"]
     # ...and a buggy source replaying an even older id is also a no-op
     ingest_batch(b0, 0, store, out, txn_bronze=True)
 
@@ -570,6 +584,36 @@ def test_streaming_ingest_txn_bronze_replay_exactly_once(spark, tmp_path):
     assert marks == [0, 1]
     # snapshot isolation bonus: version 0 still reads batch 0 alone
     assert [r.doc_id for r in T.read_table(spark, out, version=0).collect()] == [1]
+
+
+def test_streaming_ingest_releases_intermediates_on_error(spark, tmp_path, monkeypatch):
+    """A failure after the batch's first intermediates are materialized
+    (in plan building, or in the bronze commit) propagates, and leaves
+    no persisted RDD behind."""
+    from newsify_spark.operators import txnlog as T
+    from newsify_spark.streaming import ingest
+    from newsify_spark.streaming.ingest import ingest_batch
+
+    store, out = str(tmp_path / "store"), str(tmp_path / "bronze")
+    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
+    rdds = spark.sparkContext._jsc.sc().getPersistentRDDs
+    before = rdds().size()
+    # batch 0 creates the stores, so batch 1 also runs the bloom prefilter
+    ingest_batch(mk([(1, "the first document with enough words to shingle")]), 0, store, out,
+                 txn_bronze=True)
+    assert rdds().size() == before
+
+    def boom(*a, **k):
+        raise RuntimeError("injected")
+
+    b1 = mk([(2, "the first document with enough words to shingle"),
+             (3, "another document about something else entirely now")])
+    for module, name in ((ingest, "incremental_dedup"), (T, "idempotent_append")):
+        with monkeypatch.context() as m:
+            m.setattr(module, name, boom)
+            with pytest.raises(RuntimeError, match="injected"):
+                ingest_batch(b1, 1, store, out, txn_bronze=True)
+        assert rdds().size() == before, name
 
 
 def test_streaming_ingest_to_cdc_curation_end_to_end(spark, tmp_path):
